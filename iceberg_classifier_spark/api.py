@@ -19,10 +19,11 @@ instead of a global sort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.functions import text as T
+from iceberg_classifier_spark.operators import minhash
 from iceberg_classifier_spark.operators.folds import (  # noqa: F401 — re-export
     stratified_split,
     with_stratified_folds,
@@ -40,22 +41,6 @@ from iceberg_classifier_spark.operators.stacking import (  # noqa: F401
     stack_stats,
 )
 
-# Broder universal-hash family — the same literal (a, b) tables the
-# registered dedup_minhash_lsh shares with its DuckDB oracle.
-MH_P = 2305843009213693951  # 2^61 - 1
-_MH_A = [2 * ((1103515245 * (i + 1) + 12345) % 1073741823) + 1 for i in range(64)]
-_MH_B = [(1103515245 * (i + 101) + 12345) % 2147483648 for i in range(64)]
-
-
-def _base_hashes(text: Column, shingle_n: int) -> Column:
-    """One md5-prefix base hash per ``shingle_n``-token shingle — the
-    family members below reuse it, so crypto-hash work is per shingle,
-    not per (seed, shingle)."""
-    sh = T.shingles(T.tokens(text), shingle_n)
-    return F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-    )
-
 
 def minhash_signatures(
     df: DataFrame,
@@ -66,28 +51,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-document MinHash signature: ``(id_col, sig array<bigint>)``.
 
-    h_i(s) = (a_i · md5_32(s) + b_i) mod p over token shingles — per-row
-    array math, no explode, no shuffle. Documents with fewer than
+    h_i(s) = (a_i · md5_32(s) + b_i) mod (2^61 − 1) over token shingles —
+    per-row array math, no explode, no shuffle. Documents with fewer than
     ``shingle_n`` tokens (no shingles) are dropped.
     """
-    if n_hashes > len(_MH_A):
-        raise ValueError(f"n_hashes > {len(_MH_A)} not supported")
-    hs = df.select(
-        F.col(id_col), _base_hashes(F.col(text_col), shingle_n).alias("hv")
-    ).where(F.size("hv") > 0)
-    return hs.select(
-        id_col,
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        "hv",
-                        (lambda i: lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P))(i),
-                    )
-                )
-                for i in range(n_hashes)
-            ]
-        ).alias("sig"),
+    return minhash.signatures(
+        df, text_col, id_col, n_hashes, modulus=minhash.P61, shingle_n=shingle_n
     )
 
 
@@ -142,81 +111,16 @@ def minhash_dedup_pairs(
     via ``spark.catalog.clearCache()`` (or persist ``df`` yourself) when
     you own the session's cache lifecycle.
     """
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
-    if bucket_cap is not None and bucket_cap < 1:
-        raise ValueError("bucket_cap must be >= 1 (or None to disable)")
-    rows_per_band = n_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
-    if cache_signatures:
-        sig = sig.cache()
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at(F.col("sig"), b * rows_per_band + r + 1).cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    bands_df = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "band_hash")
-    )
-    if bucket_cap is None:
-        pair_src = bands_df
-    else:
-        # bucket-size control: min-id + count per bucket are associative
-        # (map-side combined), so the hot bucket collapses before shuffle
-        bsz = bands_df.groupBy("band", "band_hash").agg(
-            F.min(id_col).alias("_lowest"), F.count(F.lit(1)).alias("_sz")
-        )
-        pair_src = bands_df.join(
-            bsz.where(F.col("_sz") <= bucket_cap).select("band", "band_hash"),
-            ["band", "band_hash"],
-        )
-    a, b = pair_src.alias("a"), pair_src.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    )
-    if bucket_cap is not None:
-        star = (
-            bands_df.join(
-                bsz.where(F.col("_sz") > bucket_cap).select(
-                    "band", "band_hash", "_lowest"
-                ),
-                ["band", "band_hash"],
-            )
-            .where(F.col(id_col) > F.col("_lowest"))
-            .select(
-                F.col("_lowest").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-        )
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda eq: eq == 1,
-            )
-        )
-        / F.lit(float(n_hashes))
-    )
-    out = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+    out = minhash.dedup_pairs(
+        df,
+        text_col,
+        id_col,
+        n_hashes,
+        bands,
+        modulus=minhash.P61,
+        shingle_n=shingle_n,
+        bucket_cap=bucket_cap,
+        cache_signatures=cache_signatures,
     )
     if min_jaccard > 0.0:
         out = out.where(F.col("est_jaccard") >= min_jaccard)

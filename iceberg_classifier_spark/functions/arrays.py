@@ -126,11 +126,19 @@ def vsize_frac(a: Column | str, threshold: float) -> Column:
 
 
 
-def viso_active_count(a: Column | str, sigmas: float = 2.0) -> Column:
+def viso_active_count(
+    a: Column | str,
+    sigmas: float = 2.0,
+    mean: Column | None = None,
+    std: Column | None = None,
+) -> Column:
     """Count of px > mean + sigmas*std — same array_repeat trick as
-    viso_mask so the threshold folds run once per row, not per element."""
+    viso_mask so the threshold folds run once per row, not per element.
+    Pass ``mean``/``std`` when the row already carries them."""
     a = F.col(a) if isinstance(a, str) else a
-    thresh = vmean(a) + F.lit(sigmas) * vstd(a)
+    m = vmean(a) if mean is None else mean
+    s = vstd(a, m) if std is None else std
+    thresh = m + F.lit(sigmas) * s
     th_arr = F.array_repeat(thresh, F.size(a))
     flags = F.zip_with(a, th_arr, lambda x, t: F.when(x > t, 1).otherwise(0))
     return F.aggregate(flags, F.lit(0), lambda acc, v: acc + v)

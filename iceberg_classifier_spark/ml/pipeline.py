@@ -31,18 +31,24 @@ from iceberg_classifier_spark.operators.folds import with_stratified_folds
 def engineered_features(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Per-row feature block mirroring the reference's inputs: the image
     statistics + iso/size features (main-newInput.py:79-82) + the raw
-    vector elements (stand-in for CNN activations)."""
+    vector elements (stand-in for CNN activations).
+
+    ``f_mean`` and ``f_std`` are projected once per row and read back as
+    columns. The iso threshold ``mean + 2·std`` reaches the per-element
+    comparison through ``array_repeat`` (``A.viso_active_count``), never
+    as a free variable of a lambda — Catalyst re-evaluates a captured fold
+    per element, O(d²) per row — so the count stays O(d) even where
+    Catalyst collapses the projections and inlines the two folds."""
     v = F.col(vec_col).cast("array<double>")
-    mean = A.vmean(v)
-    std = A.vstd(v)
-    return df.select(
+    mean, std = F.col("f_mean"), F.col("f_std")
+    d = df.select("*", A.vmean(v).alias("f_mean"))
+    d = d.select("*", A.vstd(v, mean).alias("f_std"))
+    return d.select(
         "*",
-        mean.alias("f_mean"),
-        std.alias("f_std"),
         F.array_min(v).alias("f_min"),
         F.array_max(v).alias("f_max"),
         A.vsize_frac(v, 0.0).alias("f_size"),
-        F.size(F.filter(v, lambda x: x > mean + 2 * std))
+        A.viso_active_count(v, mean=mean, std=std)
         .cast("double")
         .alias("f_iso_active"),
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 TARGET_FOLD_BUCKETS = 1024
@@ -38,11 +39,18 @@ def with_stratified_folds(
     IS the global id-order rank — the output is bit-identical to the
     unsalted formula, only the shuffle shape changes. The min/max probe
     is one cheap agg (read table stats instead at 100 TB).
+
+    A non-integral id (the reference's string SAR ids) has no range to
+    cut, so it gets one bucket per label — the unsalted formula itself.
     """
-    mm = df.agg(F.min(id_col).alias("lo"), F.max(id_col).alias("hi")).first()
-    lo, hi = mm["lo"], mm["hi"]
-    width = max(1, (hi - lo + 1) // TARGET_FOLD_BUCKETS)
-    d = df.withColumn("_fb", F.expr(f"({id_col} - {lo}) div {width}"))
+    bucket = F.lit(0)
+    if isinstance(df.schema[id_col].dataType, IntegralType):
+        mm = df.agg(F.min(id_col).alias("lo"), F.max(id_col).alias("hi")).first()
+        lo, hi = mm["lo"], mm["hi"]
+        if lo is not None:
+            width = max(1, (hi - lo + 1) // TARGET_FOLD_BUCKETS)
+            bucket = F.expr(f"({id_col} - {lo}) div {width}")
+    d = df.withColumn("_fb", bucket)
     wl = Window.partitionBy(label_col, "_fb").orderBy(id_col)
     local = d.withColumn("_lr", F.row_number().over(wl))
     cnts = d.groupBy(label_col, "_fb").agg(F.count(F.lit(1)).alias("_c"))

@@ -14,12 +14,9 @@ from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.functions import arrays as A
 from iceberg_classifier_spark.functions import text as T
+from iceberg_classifier_spark.operators import minhash
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import (
-    load,
-    load_parallel,
-    parquet_column_bounds,
-)
+from iceberg_classifier_spark.sources.tables import id_bound, load, load_parallel
 
 JACCARD_MIN = 0.05
 # Stop-shingle document-frequency cap: a shingle shared by more than this
@@ -128,8 +125,8 @@ def _shingle_pairs(
         d = d.where(F.expr(_DET_SAMPLE))
     toks = d.select("doc_id", T.tokens("text").alias("toks"))
     shing = toks.select("doc_id", T.shingles(F.col("toks"), 3).alias("sh"))
-    bounds = parquet_column_bounds(sf_dir, "documents", "doc_id")
-    if bounds is not None and 0 <= bounds[0] and bounds[1] < (1 << 32):
+    m = id_bound(sf_dir, "documents", "doc_id")
+    if m is not None and m <= (1 << 32):
         # packed kernel: one int64 per posting entry / two per pair row.
         # shuffle 8-byte shingle hashes, not ~30-char strings; a 64-bit
         # collision merging two shingles is ~|vocab|²/2⁶⁴ ≈ 0 and would
@@ -259,14 +256,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MH_P = 4294967311  # first prime above 2^32 — universal-hash modulus
-# odd multipliers / offsets from the repo's LCG; a_i < 2^31 and base < 2^32
-# keep a_i*base + b_i < 2^63, so the whole family is exact int64 on both
-# engines
-_MH_A = [2 * ((1103515245 * (i + 1) + 12345) % 1073741823) + 1 for i in range(N_MINHASH)]
-_MH_B = [(1103515245 * (i + 101) + 12345) % 2147483648 for i in range(N_MINHASH)]
-_MH_A_SQL = "[" + ", ".join(str(a) for a in _MH_A) + "]"
-_MH_B_SQL = "[" + ", ".join(str(b) for b in _MH_B) + "]"
+_MH_A_SQL, _MH_B_SQL = minhash.family_sql(N_MINHASH)
 
 
 @query(
@@ -291,7 +281,7 @@ _MH_B_SQL = "[" + ", ".join(str(b) for b in _MH_B) + "]"
     ), hashed AS (
       SELECT doc_id, seed,
              min((({_MH_A_SQL})[seed + 1] * h + ({_MH_B_SQL})[seed + 1])
-                 % {MH_P}) AS mh
+                 % {minhash.P32}) AS mh
       FROM (SELECT doc_id, unnest(hv) AS h FROM hs),
            (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed)
       GROUP BY 1, 2
@@ -317,103 +307,30 @@ _MH_B_SQL = "[" + ", ".join(str(b) for b in _MH_B) + "]"
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH candidate pairs: {N_MINHASH} portable min-hashes per
-    doc from a universal-hash family over ONE md5-prefix base hash per
-    shingle — h_i(s) = (a_i·md5_32(s) + b_i) mod p with literal (a_i, b_i)
-    tables both engines share, so DuckDB rebuilds bit-identical signatures
-    while the crypto-hash work drops {N_MINHASH}× (the r2 version ran md5
-    per (seed, shingle): 19.3 s of the sf0.1 bench was md5 throughput).
-    {N_BANDS} bands × 4 rows; docs sharing any band bucket become
+    doc, {N_BANDS} bands × 4 rows; docs sharing any band bucket become
     candidates, verified with the estimated Jaccard (= fraction of equal
     minhashes). Fully value-checked — the candidate set AND the estimates
     hash-match the oracle.
 
-    Scale: signatures are per-row array math (no explode, no shuffle); the
-    only shuffle is the equi-join on (band, band_key) whose fan-out is
-    controlled by band width. One multiply-add-mod per (seed, shingle)
-    is the textbook Broder construction — hash throughput scales with
-    corpus bytes, not bytes × seeds.
+    The construction is ``operators.minhash`` — the kernel
+    ``api.minhash_dedup_pairs`` runs — with the registry's modulus and no
+    bucket cap. Scale notes live there.
     """
-    d = load_parallel(spark, sf_dir, "documents")
-    toks = d.select("doc_id", T.tokens("text").alias("toks"))
-    sh = toks.select("doc_id", T.shingles(F.col("toks"), 3).alias("sh")).where(
-        F.size("sh") > 0
-    )
-    # one md5-prefix base hash per shingle, materialized in its own
-    # projection so the 32 family members reuse it instead of re-hashing
-    hs = sh.select(
+    # signatures cached: scanned by the band explode AND both sig joins
+    p = minhash.dedup_pairs(
+        load_parallel(spark, sf_dir, "documents"),
+        "text",
         "doc_id",
-        F.transform(
-            "sh",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
-        ).alias("hv"),
+        N_MINHASH,
+        N_BANDS,
+        modulus=minhash.P32,
+        cache_signatures=True,
     )
-    def family_member(i):
-        # one-arg lambda (a two-arg lambda would make F.transform pass the
-        # element index as the second parameter)
-        return lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P)
-
-    sig = hs.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(F.transform("hv", family_member(i)))
-                for i in range(N_MINHASH)
-            ]
-        ).alias("sig"),
-    )
-    rows_per_band = N_MINHASH // N_BANDS
-    sig = sig.cache()  # scanned by the band explode AND both sig joins
-    # band rows carry (doc_id, band, band_hash) ONLY — shuffling the
-    # 32-long signature through the 8-way band explosion would move 8
-    # copies of every signature; instead the (small) deduped candidate
-    # set joins the signatures back, one copy per doc per side
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                F.col("sig"), b * rows_per_band + r + 1
-                            ).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda eq: eq == 1,
-        )
-    ).cast("double") / F.lit(N_MINHASH)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return p.select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.round("est_jaccard", 6).alias("est_jaccard"),
+    ).orderBy("doc_a", "doc_b")
 
 
 @query(
@@ -907,8 +824,7 @@ _MHQ_K = 16      # minhash functions
 _MHQ_BANDS = 4   # bands of 4 rows each
 _MHQ_TAU = 0.2   # ground-truth Jaccard threshold
 # same universal-hash family as dedup_minhash_lsh, first _MHQ_K members
-_MHQ_A_SQL = "[" + ", ".join(str(a) for a in _MH_A[:_MHQ_K]) + "]"
-_MHQ_B_SQL = "[" + ", ".join(str(b) for b in _MH_B[:_MHQ_K]) + "]"
+_MHQ_A_SQL, _MHQ_B_SQL = minhash.family_sql(_MHQ_K)
 
 
 @query(
@@ -941,7 +857,7 @@ _MHQ_B_SQL = "[" + ", ".join(str(b) for b in _MH_B[:_MHQ_K]) + "]"
     ), hashed AS (
       SELECT doc_id, seed,
              min((({_MHQ_A_SQL})[seed + 1] * h0 + ({_MHQ_B_SQL})[seed + 1])
-                 % {MH_P}) AS mh
+                 % {minhash.P32}) AS mh
       FROM hb, (SELECT unnest(generate_series(0, {_MHQ_K - 1})) AS seed)
       GROUP BY 1, 2
     ), bands AS (
@@ -992,19 +908,13 @@ def minhash_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch's realized quality is oracle-checked, not just its row
     count (upgrade over the rows-only `dedup_minhash_lsh`).
 
-    Scale: signatures are one explode + (doc, seed) min-aggregation
-    (map-side combined); candidates come from the band-bucket equi-join
-    (never all pairs). The exact-truth side is inherently quadratic —
+    Scale: signatures are the per-row array kernel of
+    ``operators.minhash`` (no shuffle); candidates come from the
+    band-bucket equi-join (never all pairs). The exact-truth side is inherently quadratic —
     the round-7 sampled mode caps it at sample² of the corpus (the
     uncapped audit measured 265 s at 10× data in the round-6 sweep), and
     a uniform pair sample estimates precision/recall unbiasedly.
     """
-    from iceberg_classifier_spark.functions.text import shingles, tokens
-
-    docs = load(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", F.explode(shingles(tokens(F.col("text")))).alias("sg")
-    )
     # exact-truth side: the canonical df-capped posting-list kernel over
     # the deterministic ~30% doc sample (sample² pair work, int64 shingle
     # hashes through the shuffle instead of raw strings)
@@ -1016,65 +926,16 @@ def minhash_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     )
-    # one md5-prefix base per shingle; the seed family is multiply-add-mod
-    # (same universal-hash construction as dedup_minhash_lsh)
-    hb = sh.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("sg"), 1, 8), 16, 10).cast("bigint").alias("h0"),
+    # cached: _MHQ_BANDS rows of (doc_id, band, band_hash) per doc — tiny,
+    # and consumed by BOTH the full candidate count and the
+    # sampled-universe join (uncached each branch recomputes signatures)
+    sig = minhash.signatures(
+        load(spark, sf_dir, "documents"), "text", "doc_id", _MHQ_K,
+        modulus=minhash.P32,
     )
-    # all K minhashes in ONE map-side-combinable aggregation — the seed
-    # dimension lives in the agg list, not in a K-fold crossJoin row
-    # blowup of the shingle frame (which re-evaluated per plan branch:
-    # measured 10 s per evaluation at sf1)
-    mins = hb.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(_MH_A[i]) * F.col("h0") + F.lit(_MH_B[i])) % F.lit(MH_P)
-            ).alias(f"m{i}")
-            for i in range(_MHQ_K)
-        ]
-    )
-    rpb = _MHQ_K // _MHQ_BANDS
-    # cached: _MHQ_BANDS rows of (doc_id, band, key) per doc — tiny, and
-    # consumed by BOTH the full candidate count and the sampled-universe
-    # join (uncached each branch recomputes signatures over the corpus)
-    bands = (
-        mins.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("int").alias("band"),
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"m{b * rpb + i}").cast("string")
-                                    for i in range(rpb)
-                                ],
-                            ).alias("key"),
-                        )
-                        for b in range(_MHQ_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        .cache()
-    )
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.key") == F.col("bb.key"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("da"), F.col("bb.doc_id").alias("db")
-        )
-        .distinct()
+    keys = minhash.band_keys(sig, "doc_id", _MHQ_K, _MHQ_BANDS).cache()
+    cand = minhash.candidate_pairs(keys, "doc_id").select(
+        F.col("id_a").alias("da"), F.col("id_b").alias("db")
     )
     n_cand_full = cand.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates")

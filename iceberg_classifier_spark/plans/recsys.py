@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from iceberg_classifier_spark.operators import cooccur
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import load, parquet_column_bounds
+from iceberg_classifier_spark.sources.tables import id_bound, load
 
 _II_TOPK = 10
 _II_MIN_CO = 3  # minimum co-occurrence support
@@ -89,9 +90,11 @@ def itemitem_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     i<j pairs map-side from each array with the posting-list
     nested-explode trick. Popularity comes from re-exploding the cached
     basket frame — an 8-byte-per-row shuffle on i instead of a second
-    pass over the fact join.
+    pass over the fact join. Baskets, pair emission and the packed
+    sort-streamed count are ``operators.cooccur``, shared with
+    coverage_novelty_recs.
     """
-    ui_sets = (
+    ui = (
         load(spark, sf_dir, "lineitem")
         .join(
             load(spark, sf_dir, "orders"),
@@ -100,72 +103,24 @@ def itemitem_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
         )
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_set("i")).alias("items"))
     )
     # the basket frame feeds pop AND pair emission; DISK_ONLY per the
     # growing-frame discipline (the r8 broadcast lesson); sweeps/bench
     # clearCache between queries.
-    ui_sets = ui_sets.persist(StorageLevel.DISK_ONLY)
+    ui_sets = cooccur.sorted_baskets(ui, "u", "i").persist(StorageLevel.DISK_ONLY)
     pop = (
         ui_sets.select(F.explode("items").alias("i"))
         .groupBy("i")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_u"))
     )
-    # map-side i<j pair emission from the capped sorted basket (ascending
-    # item ids, so ia < ib by construction — the _shingle_pairs shape)
-    pairs = (
-        ui_sets.select(F.slice("items", 1, _II_USER_CAP).alias("arr"))
-        .select(F.posexplode("arr").alias("j", "ia"), "arr")
-        .select(
-            "ia",
-            F.explode(F.expr("slice(arr, j + 2, size(arr))")).alias("ib"),
-        )
+    # the pk pack's bound is the max partkey from the part dim's parquet
+    # FOOTER stats — no Spark job
+    co = cooccur.pair_counts(
+        ui_sets,
+        _II_MIN_CO,
+        id_bound(sf_dir, "part", "p_partkey"),
+        cap=_II_USER_CAP,
     )
-    # the pair stream is the op's bulk (1.27e9 rows at sf10 — ~40 pairs
-    # per user, linear in users) and 97% of emitted pairs are UNIQUE
-    # (1.23e9 distinct of 1.27e9, measured), so ANY hash aggregation
-    # must hold ~40 GB of key state — it spilled at every partition
-    # width tried (256/512/1024: 116-167 s at sf10). r11: count runs of
-    # the SORTED packed key instead — count(*) over a pk-partitioned
-    # window plans Exchange → radix Sort → streaming WindowExec that
-    # buffers ONE pk group (≤ max co_u rows) at a time, no hash map at
-    # all: measured 68-77 s vs 146-159 s for the hash agg at sf10
-    # (interleaved, same session), and flat at sf1 where the hash fits
-    # memory. The pack into ONE int64 (max partkey from the part dim's
-    # parquet FOOTER stats — no Spark job) halves the shuffle bytes;
-    # the post-filter dropDuplicates dedupes the few co_u >= MIN_CO
-    # survivor rows and reuses the same exchange. Falls back to the
-    # two-column groupBy if the key space could overflow the packing
-    # (partkey² >= 2^63) or stats are absent.
-    pk_bounds = parquet_column_bounds(sf_dir, "part", "p_partkey")
-    m = (pk_bounds[1] + 1) if pk_bounds and pk_bounds[0] >= 0 else 0
-    if m and m * m < (1 << 63):
-        co = (
-            pairs.select(
-                (F.col("ia") * m + F.col("ib")).alias("pk")
-            )
-            .repartition(256, "pk")
-            .withColumn(
-                "co_u",
-                F.count(F.lit(1))
-                .over(Window.partitionBy("pk"))
-                .cast("bigint"),
-            )
-            .where(F.col("co_u") >= _II_MIN_CO)
-            .dropDuplicates(["pk"])
-            .select(
-                F.expr(f"pk div {m}").alias("ia"),
-                (F.col("pk") % m).alias("ib"),
-                "co_u",
-            )
-        )
-    else:
-        co = (
-            pairs.groupBy("ia", "ib")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("co_u"))
-            .where(F.col("co_u") >= _II_MIN_CO)
-        )
     pa = pop.select(F.col("i").alias("ia"), F.col("n_u").alias("na"))
     pb = pop.select(F.col("i").alias("ib"), F.col("n_u").alias("nb"))
     scored = (

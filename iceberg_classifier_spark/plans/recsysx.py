@@ -29,9 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators import cooccur
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.plans.privstat import _acklam_inv_norm
-from iceberg_classifier_spark.sources.tables import load, parquet_column_bounds
+from iceberg_classifier_spark.sources.tables import id_bound, load
 
 _REC_K = 3
 _REC_MIN_CO = 2
@@ -163,13 +164,10 @@ def coverage_novelty_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side from each user's sorted basket array (the posting-list
     # nested-explode shape). The basket frame feeds pop, nu AND pair
     # emission — persisted once, disk-backed (r8 growing-frame lesson).
-    ui_sets = (
-        li.join(o.hint("merge"), li["l_orderkey"] == o["o_orderkey"])
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .groupBy("u")
-        .agg(F.sort_array(F.collect_set("i")).alias("items"))
-        .persist(StorageLevel.DISK_ONLY)
+    ui = li.join(o.hint("merge"), li["l_orderkey"] == o["o_orderkey"]).select(
+        F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
     )
+    ui_sets = cooccur.sorted_baskets(ui, "u", "i").persist(StorageLevel.DISK_ONLY)
     # one basket row per user, so n_users is a plain count of the cache
     nu = ui_sets.agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
     pop = (
@@ -177,54 +175,13 @@ def coverage_novelty_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_u"))
     )
-    # canonical ia<ib pairs halve the heavy basket-blocked agg; the
+    # canonical ia<ib pairs halve the heavy basket-blocked count; the
     # mirrored direction is restored on the (support-filtered, much
-    # smaller) aggregate, not on the raw pair stream. The pair stream is
-    # the op's bulk and ~97% of emitted pairs are unique (itemitem
-    # measurement at sf10), so a hash aggregation spills on its own key
-    # state; count runs of the SORTED packed key instead — count(*) over
-    # a pk-partitioned window = Exchange → radix Sort → streaming
-    # WindowExec buffering one pk group at a time, no hash map (2.1×
-    # faster than the hash agg at sf10, flat at sf1 — the
-    # itemitem_cosine_topk treatment). Falls back to the 2-column
-    # groupBy when ids could overflow the pack or stats are absent.
-    raw_pairs = (
-        ui_sets.select(F.col("items").alias("arr"))
-        .select(F.posexplode("arr").alias("j", "ia"), "arr")
-        .select(
-            "ia",
-            F.explode(F.expr("slice(arr, j + 2, size(arr))")).alias("ib"),
-        )
-    )
-    pk_bounds = parquet_column_bounds(sf_dir, "part", "p_partkey")
-    m = (pk_bounds[1] + 1) if pk_bounds and pk_bounds[0] >= 0 else 0
-    if m and m * m < (1 << 63):
-        co_half = (
-            raw_pairs.select((F.col("ia") * m + F.col("ib")).alias("pk"))
-            .repartition(256, "pk")
-            .withColumn(
-                "co_u",
-                F.count(F.lit(1))
-                .over(Window.partitionBy("pk"))
-                .cast("bigint"),
-            )
-            .where(F.col("co_u") >= _REC_MIN_CO)
-            .dropDuplicates(["pk"])
-            .select(
-                F.expr(f"pk div {m}").alias("ia"),
-                (F.col("pk") % m).alias("ib"),
-                "co_u",
-            )
-        )
-    else:
-        co_half = (
-            raw_pairs.groupBy("ia", "ib")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("co_u"))
-            .where(F.col("co_u") >= _REC_MIN_CO)
-        )
-    co_half = co_half.persist(
-        StorageLevel.DISK_ONLY
-    )  # read by both union directions
+    # smaller) aggregate, not on the raw pair stream; persisted because
+    # both union directions read it
+    co_half = cooccur.pair_counts(
+        ui_sets, _REC_MIN_CO, id_bound(sf_dir, "part", "p_partkey")
+    ).persist(StorageLevel.DISK_ONLY)
     co = co_half.unionByName(
         co_half.select(
             F.col("ib").alias("ia"), F.col("ia").alias("ib"), "co_u"

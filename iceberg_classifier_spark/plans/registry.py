@@ -10,6 +10,8 @@ hash identically.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -259,168 +261,13 @@ def _rotation_offset(n: int) -> int:
 
 
 def load_all_queries() -> dict[str, QueryDef]:
-    """Import every query module (side-effect: fills REGISTRY)."""
-    from iceberg_classifier_spark.plans import (  # noqa: F401
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        curation2,
-        curation3,
-        curation4,
-        behavior,
-        scaleops,
-        vectors,
-        vectors2,
-        profiling,
-        mlprep,
-        stacking,
-        textops,
-        dedup,
-        similarity,
-        mlpipe,
-        multimodal,
-        streaming_q,
-        streaming_q2,
-        dedup3,
-        advanced,
-        advanced2,
-        advanced3,
-        analytics,
-        analytics2,
-        analytics3,
-        analytics4,
-        analytics5,
-        analytics6,
-        search,
-        pipeline_ops,
-        warehouse2,
-        geo,
-        pysource,
-        modernapi,
-        modernapi2,
-        governance,
-        warehouse4,
-        textops3,
-        modernapi3,
-        curation5,
-        transfer,
-        curation6,
-        analytics7,
-        linkage,
-        profiling2,
-        closedform,
-        curation7,
-        advanced4,
-        vectors3,
-        search2,
-        layout,
-        analytics8,
-        evalops,
-        evalops2,
-        textops4,
-        evalops3,
-        mlops2,
-        search3,
-        warehouse5,
-        bizops,
-        governance2,
-        bizops2,
-        analytics9,
-        bizops3,
-        multimodal2,
-        analytics10,
-        sysops,
-        recsys,
-        dqops,
-        graph2,
-        robustops,
-        dedup2,
-        analytics11,
-        analytics12,
-        mlscore,
-        textops5,
-        linkage2,
-        analytics13,
-        search4,
-        analytics14,
-        evalops4,
-        bizops4,
-        attribution,
-        analytics15,
-        curation8,
-        curation9,
-        linkage3,
-        analytics16,
-        search5,
-        analytics17,
-        analytics18,
-        textops6,
-        analytics19,
-        analytics20,
-        multimodal3,
-        evalops5,
-        mlscore2,
-        analytics21,
-        multimodal4,
-        expops,
-        analytics22,
-        analytics23,
-        analytics24,
-        analytics25,
-        analytics26,
-        analytics27,
-        textops7,
-        analytics28,
-        analytics29,
-        analytics30,
-        analytics31,
-        analytics32,
-        analytics33,
-        textops8,
-        sysops2,
-        vectors4,
-        multimodal5,
-        analytics34,
-        search6,
-        mlscore3,
-        glmtree,
-        econx,
-        analytics35,
-        statx,
-        finops,
-        evalx,
-        featsel,
-        boostx,
-        privstat,
-        recsysx,
-        sysx,
-        econx2,
-        multimodal6,
-        multimodal7,
-        statx2,
-        causalx,
-        otx,
-        nmfx,
-        matchx,
-        ratingx,
-        graphx2,
-        anomx,
-        dpx,
-        barcodex,
-        scmx,
-        flowx,
-        tsdbx,
-        spatx,
-        auctx,
-        finx2,
-        contrastx,
-        dspx,
-        privx2,
-        votx,
-        cryptx,
-        cnnx,
-    )
+    """Import every module of ``iceberg_classifier_spark.plans``
+    (side-effect: fills REGISTRY), in module-name order."""
+    from iceberg_classifier_spark import plans
+
+    for mod in sorted(m.name for m in pkgutil.iter_modules(plans.__path__)):
+        if mod != "registry":
+            importlib.import_module(f"{plans.__name__}.{mod}")
 
     # Rotate over the oracle-backed keys ONLY, and append the rows-only
     # (oracle=None) MLlib fits at the end: the external driver value-checks

@@ -17,14 +17,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from iceberg_classifier_spark.functions import text as T
+from iceberg_classifier_spark.operators import minhash
 from iceberg_classifier_spark.plans.dedup import (
-    MH_P,
     N_BANDS,
     N_MINHASH,
-    _MH_A,
     _MH_A_SQL,
-    _MH_B,
     _MH_B_SQL,
 )
 from iceberg_classifier_spark.plans.registry import query
@@ -35,55 +32,11 @@ _ROWS_PER_BAND = N_MINHASH // N_BANDS
 
 
 def _band_keys(d: DataFrame) -> DataFrame:
-    """(doc_id, band, band_hash) LSH keys — the same Broder construction
-    as dedup_minhash_lsh (one md5-prefix base hash per 3-shingle, the
-    shared (a_i, b_i) universal-hash family, {N_BANDS} bands ×
-    {_ROWS_PER_BAND} rows), emitted as band keys only: per-row array
-    math, no shuffle."""
-    sh = d.select(
-        "doc_id", T.shingles(T.tokens("text"), 3).alias("sh")
-    ).where(F.size("sh") > 0)
-    hs = sh.select(
-        "doc_id",
-        F.transform(
-            "sh",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("hv"),
-    )
-
-    def family_member(i):
-        return lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P)
-
-    sig = hs.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(F.transform("hv", family_member(i)))
-                for i in range(N_MINHASH)
-            ]
-        ).alias("sig"),
-    )
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                F.col("sig"), b * _ROWS_PER_BAND + r + 1
-                            ).cast("string")
-                            for r in range(_ROWS_PER_BAND)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
+    """(doc_id, band, band_hash) LSH keys of dedup_minhash_lsh's
+    ``operators.minhash`` construction (registry modulus, {N_BANDS} bands ×
+    {_ROWS_PER_BAND} rows): per-row array math, no shuffle."""
+    sig = minhash.signatures(d, "text", "doc_id", N_MINHASH, modulus=minhash.P32)
+    return minhash.band_keys(sig, "doc_id", N_MINHASH, N_BANDS)
 
 
 def _doc_thirds_stream(spark: SparkSession, sf_dir: str):
@@ -153,7 +106,7 @@ def _bands_oracle(src: str = "documents") -> str:
     ), hashed AS (
       SELECT doc_id, seed,
              min((({_MH_A_SQL})[seed + 1] * h + ({_MH_B_SQL})[seed + 1])
-                 % {MH_P}) AS mh
+                 % {minhash.P32}) AS mh
       FROM (SELECT doc_id, unnest(hv) AS h FROM hs),
            (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed)
       GROUP BY 1, 2

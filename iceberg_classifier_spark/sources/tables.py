@@ -95,24 +95,24 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def parquet_column_bounds(sf_dir: str, name: str, column: str):
-    """(min, max) of a column from parquet FOOTER statistics — no Spark
-    job, so plan-time eligibility checks (e.g. "do these ids fit an int64
-    pack?") cost ~ms even inside a timed bench run. Returns None when any
-    row group lacks min/max stats or the probe fails; callers must fall
-    back to an always-correct unpacked path."""
+    """(min, max) of an integer column from parquet FOOTER statistics — no
+    Spark job, so plan-time eligibility checks (e.g. "do these ids fit an
+    int64 pack?") cost ~ms even inside a timed bench run. Returns None
+    when the table directory has any subdirectory (a nested layout whose
+    files a top-level listing would miss), when any row group lacks
+    min/max stats, when a bound is not an ``int``, or when the probe
+    fails; callers must fall back to an always-correct unpacked path."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
     try:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
+        if os.path.isdir(path):
+            entries = os.listdir(path)
+            if any(os.path.isdir(os.path.join(path, f)) for f in entries):
+                return None
+            files = [os.path.join(path, f) for f in entries if f.endswith(".parquet")]
+        else:
+            files = [path]
         lo, hi = None, None
         for f in files:
             md = pq.read_metadata(f)
@@ -121,11 +121,24 @@ def parquet_column_bounds(sf_dir: str, name: str, column: str):
                 st = md.row_group(rg).column(idx).statistics
                 if st is None or not st.has_min_max:
                     return None
+                if not (isinstance(st.min, int) and isinstance(st.max, int)):
+                    return None
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
         return None if lo is None else (lo, hi)
     except Exception:  # noqa: BLE001 — stats probe must never break a plan
         return None
+
+
+def id_bound(sf_dir: str, name: str, column: str) -> int | None:
+    """Exclusive upper bound ``m`` of a non-negative integer id column
+    (every value in ``[0, m)``) from footer stats, or None when the stats
+    cannot vouch for it — the one eligibility input of the packed
+    kernels, each of which checks that its pack fits ``m``."""
+    bounds = parquet_column_bounds(sf_dir, name, column)
+    if bounds is None or bounds[0] < 0:
+        return None
+    return bounds[1] + 1
 
 
 def fixture_dir(sf_dir: str, kind: str, table: str) -> tuple[str, bool]:

@@ -31,9 +31,12 @@ sf_dir = sys.argv[3]
 registry = load_all_queries()
 names = json.loads(sys.argv[4]) if sys.argv[4] != "HEADLINE" else sorted(
     n for n, qd in registry.items() if qd.headline)
+# a name this checkout does not register is skipped, warmup included
+names = [n for n in names if n in registry]
 runs = int(sys.argv[5])
-registry[names[0]].fn(spark, sf_dir).write.format("noop").mode(
-    "overwrite").save()
+if names:
+    registry[names[0]].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite").save()
 spark.catalog.clearCache()
 out = {}
 for n in names:

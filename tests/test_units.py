@@ -119,11 +119,17 @@ def test_log_loss_matches_sklearn_formula(spark):
     assert log_loss(df, "y", "p") == pytest.approx(exp)
 
 
-def test_stratified_folds_balanced(spark):
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_stratified_folds_balanced(spark, id_type):
+    """Integral ids take the bucketed path, non-integral ones (the
+    reference's string SAR ids) one bucket per label; both equal
+    ``(row_number() over (partition by label order by id) - 1) % k``."""
+    from pyspark.sql import Window
+
     from iceberg_classifier_spark.operators.folds import with_stratified_folds
 
-    rows = [(i, i % 3) for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, label int")
+    rows = [(i if id_type == "long" else f"id{i:04x}", i % 3) for i in range(100)]
+    df = spark.createDataFrame(rows, f"id {id_type}, label int")
     f = with_stratified_folds(df, "label", "id", 4)
     per = f.groupBy("label", "fold").count().collect()
     by_label = {}
@@ -131,6 +137,9 @@ def test_stratified_folds_balanced(spark):
         by_label.setdefault(r["label"], []).append(r["count"])
     for counts in by_label.values():
         assert max(counts) - min(counts) <= 1
+    w = Window.partitionBy("label").orderBy("id")
+    ref = df.select("id", ((F.row_number().over(w) - 1) % 4).alias("ref"))
+    assert f.join(ref, "id").where(F.col("fold") != F.col("ref")).count() == 0
 
 
 def test_sar_json_ingest(spark, tmp_path):
